@@ -3,45 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE (r20, measured): coalescePartitions.parallelismFirst=false
-      // (byte-targeted AQE coalescing, the documented production
-      // recommendation) was A/B'd over the full suite back-to-back and
-      // REJECTED — geomean 1.036 vs default (191.8 s vs 185.6 s), because
-      // the default's 1 MB minPartitionSize already collapses the suite's
-      // tiny shuffles, and byte-targeting further only strips parallelism
-      // from compute-heavy small-byte stages (x112 +27%, x50 +29%,
-      // q10 +32%). A second knob — coalescePartitions.minPartitionSize
-      // 1m→64k, aimed at the serial single-task window/agg chains — was
-      // also A/B'd (six hot queries, matched sentinels) and measured
-      // flat: those stages are key-cardinality-bound, not
-      // coalescing-bound. Both knobs stay at Spark defaults.
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Host-overload tolerance: round 5's run died to executor-heartbeat
-      // RPC timeouts (10 s ask on a CPU-starved VM), producing an empty
-      // bench artifact. Local-mode heartbeats cross the same RPC layer, so
-      // widen both the interval and the network timeout (must be larger
-      // than the interval) — a starved heartbeat then waits instead of
-      // killing the executor mid-suite.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    // ERROR, not WARN: the suite's deliberate tiny-frame windows
-    // (GlobalOrder.scala:50,74, Similarity.scala:236 — few-hundred-row
-    // frames, documented) each emit a WindowExec "single partition" WARN,
-    // ~200 lines per run. The driver captures only a ~2000-char stdout
-    // tail to find the summary JSON line, and round 9-11 artifacts show
-    // that WARN spam crowding it out ("parsed": null). The warnings are
-    // noise for this suite, not a signal worth the artifact.
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // warmup: absorb session/codegen/JIT startup so the first timed
     // query isn't charged for it
     try {
@@ -82,7 +45,7 @@ object Bench {
     def sentinelRun(): Double =
       (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0L, 4000000000L, 1L, cpus.toInt)
+        spark.range(0L, 4000000000L, 1L, cpus)
           .select(org.apache.spark.sql.functions.expr("bit_xor(xxhash64(id))"))
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

@@ -6,12 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{Sketches, TextExpressions, VectorExpressions}
 
 /** SQL surface for the engine's custom expressions, installed via the
-  * standard extension mechanism:
+  * standard extension mechanism — the session config
+  * `spark.sql.extensions=graft.ext.GraftExtensions`, which
+  * [[graft.GraftSession]] sets:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-  *   ...
   * spark.sql("SELECT graft_dot(a, b), graft_lang_id(text) FROM t")
   * }}}
   *

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (with codegen) for the vector hot paths:
   * dot products, hyperplane LSH signatures, and MinHash signatures.
@@ -173,7 +174,7 @@ object VectorExpressions {
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       // null-aware slow path: one interpreted call, only when a null
-      // element exists (same ref-obj pattern as JaccardLongSize)
+      // element exists (the KernelSupport.callback pattern)
       val ref = ctx.addReferenceObj("cosineExpr", this, classOf[CosineSim].getName)
       nullSafeCodeGen(ctx, ev, (a, b) => {
         val (tx, ty) = (elemType(left), elemType(right))
@@ -323,7 +324,7 @@ object VectorExpressions {
     * only (the shingle-hash frames); arrays must not contain null
     * elements, which holds for every hash-derived array in the tree. */
   case class JaccardLongSize(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel {
 
     override def dataType: DataType = DoubleType
 
@@ -389,15 +390,6 @@ object VectorExpressions {
       inter.toDouble / math.max(union, 1).toDouble
     }
 
-    // single interpreted call per evaluation (the QuantAudit pattern) —
-    // the loops above are JIT-compiled Scala; codegen only avoids the
-    // fallback's row-boxing
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("jaccardExpr", this, classOf[JaccardLongSize].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = ((Double) $ref.nullSafeEval($a, $b)).doubleValue();")
-    }
-
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -412,40 +404,11 @@ object VectorExpressions {
     * PER EVALUATION — measurable on the per-gram hash paths (x115 spans,
     * x76 KMV). The DuckDB oracles keep the spelled-out SQL chain, which
     * is exactly why the value equivalence is spec-asserted. */
-  case class Md5Prefix60(child: Expression) extends UnaryExpression {
+  case class Md5Prefix60(child: Expression) extends StringKernel {
 
     override def dataType: DataType = LongType
 
-    // ADVICE r19: string input only — a non-string child would
-    // ClassCastException opaquely at runtime; fail analysis instead.
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"Md5Prefix60 requires a string input, got ${other.catalogString}")
-    }
-
-    @transient private lazy val md5 =
-      new ThreadLocal[java.security.MessageDigest] {
-        override def initialValue(): java.security.MessageDigest =
-          java.security.MessageDigest.getInstance("MD5")
-      }
-
-    override def nullSafeEval(v: Any): Any = {
-      val digest = md5.get()
-      digest.reset()
-      val d = digest.digest(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-      var l = 0L
-      var i = 0
-      while (i < 8) { l = (l << 8) | (d(i) & 0xffL); i += 1 }
-      l >>> 4
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("md5PrefixExpr", this, classOf[Md5Prefix60].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = ((Long) $ref.nullSafeEval($v)).longValue();")
-    }
+    override def nullSafeEval(v: Any): Any = KernelSupport.md5Prefix60(v.asInstanceOf[UTF8String])
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -787,7 +750,7 @@ object VectorExpressions {
     * Elements arrive as float (driver parquet) or double (the cast the
     * HOF form applied first): float→double widening is exact, so both
     * input shapes produce identical audits. */
-  case class QuantAudit(child: Expression) extends UnaryExpression {
+  case class QuantAudit(child: Expression) extends UnaryKernel {
 
     override def dataType: DataType = StructType(Seq(
       StructField("scale", DoubleType, nullable = false),
@@ -797,12 +760,6 @@ object VectorExpressions {
 
     private lazy val elemIsFloat =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("quantAuditExpr", this, classOf[QuantAudit].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.nullSafeEval($v);")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val x = v.asInstanceOf[ArrayData]
@@ -846,18 +803,12 @@ object VectorExpressions {
     * EXACT (≤ dim·127² ≪ 2⁵³), so downstream cosines are identical
     * IEEE arithmetic in any engine — the x28 quantized-index recipe
     * applied to the int8 rung. */
-  case class Int8Quantize(child: Expression) extends UnaryExpression {
+  case class Int8Quantize(child: Expression) extends UnaryKernel {
 
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
     private lazy val elemIsFloat =
       child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("int8QuantExpr", this, classOf[Int8Quantize].getName)
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($v);")
-    }
 
     override def nullSafeEval(v: Any): Any = {
       val x = v.asInstanceOf[ArrayData]

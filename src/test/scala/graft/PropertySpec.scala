@@ -185,11 +185,17 @@ class PropertySpec extends SparkSpec {
   /** Adversarial text: unicode, odd whitespace, punctuation runs, empty
     * and single-char cases — the inputs where a compiled re-implementation
     * of a Column formula silently diverges. */
-  private val nastyTextGen: Gen[String] = Gen.listOf(Gen.oneOf(
-    Gen.oneOf("the", "a", "of", "und", "的", "是", "naïve", "café", "ÅBÇ"),
-    Gen.alphaNumStr.map(_.take(6)),
-    Gen.oneOf(".", ",", "!!", "??", "...", "-", "\"'", "()"),
-    Gen.oneOf(" ", "  ", "\t", "\n", " \t "))).map(_.mkString(" "))
+  private val nastyTextGen: Gen[String] = Gen.frequency(
+    4 -> Gen.listOf(Gen.oneOf(
+      Gen.oneOf("the", "a", "of", "und", "的", "是", "naïve", "café", "ÅBÇ"),
+      Gen.alphaNumStr.map(_.take(6)),
+      Gen.oneOf(".", ",", "!!", "??", "...", "-", "\"'", "()"),
+      Gen.oneOf(" ", "  ", "\t", "\n", " \t "))).map(_.mkString(" ")),
+    // tokenizer edges: empty and blank texts, leading/trailing \s that
+    // trim keeps, non-ASCII spaces that must not split, and a text whose
+    // lowering grows it from 14 to 15 bytes
+    1 -> Gen.oneOf("", "   ", "\tFoo  Bar\u000B", "\f", "a\u00A0b\u3000c",
+      "\u0130stanbul \u011E\u00DC", " x\r\ny "))
 
   test("compiled QualitySignals matches the Column formulation on adversarial text") {
     forAll(Gen.nonEmptyListOf(nastyTextGen)) { texts =>

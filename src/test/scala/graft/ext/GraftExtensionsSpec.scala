@@ -45,4 +45,10 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(r.getSeq[String](0) == Seq("a b", "b c", "c d"))
     assert(math.abs(r.getDouble(1) - 0.75) < 1e-12)
   }
+
+  test("string kernels reject a non-string input at analysis") {
+    Seq("SELECT graft_lang_id(42)", "SELECT graft_shingles(42, 2)").foreach { q =>
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+    }
+  }
 }

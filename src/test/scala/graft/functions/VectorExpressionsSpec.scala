@@ -9,6 +9,29 @@ class VectorExpressionsSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Tokenizer edges, each checked against split(lower(trim)) on Spark
+    * 4.1.2: empty and blank texts, leading/trailing `\s` that trim keeps,
+    * non-ASCII spaces that must not split, and a text whose lowering
+    * grows it from 14 to 15 bytes. */
+  private val edgeTexts = Seq(
+    "" -> Seq(""),
+    "   " -> Seq(""),
+    "\tFoo  Bar\u000B" -> Seq("", "foo", "bar", ""),
+    "\f" -> Seq("", ""),
+    "a\u00A0b\u3000c" -> Seq("a\u00A0b\u3000c"),
+    "\u0130stanbul \u011E\u00DC" -> Seq("i\u0307stanbul", "\u011F\u00FC"),
+    " x\r\ny " -> Seq("x", "y"))
+  private val edges = edgeTexts.map(_._1)
+
+  test("KernelSupport.tokens equals split(lower(trim(text)), \"\\\\s+\") on the edges") {
+    val want = edges.toDF("text").select(TextFunctions.tokens(col("text")))
+      .collect().map(_.getSeq[String](0).toSeq)
+    assert(want.toSeq == edgeTexts.map(_._2))
+    val got = edges.map(t => KernelSupport.tokens(
+      org.apache.spark.unsafe.types.UTF8String.fromString(t)).map(_.toString).toSeq)
+    assert(got == want.toSeq)
+  }
+
   private def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
@@ -108,7 +131,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("Md5Prefix60 equals CAST(conv(substr(md5(x),1,15),16,10) AS BIGINT)") {
     val df = ((1 to 200).map(i => s"gram $i token ${i * 7}") ++
-      Seq("", " ", "déjà vu ünïcode 中文", "a|b|c", "x" * 500)).toDF("x")
+      Seq("", " ", "déjà vu ünïcode 中文", "a|b|c", "x" * 500) ++ edges).toDF("x")
     val ref = expr("CAST(conv(substr(md5(x), 1, 15), 16, 10) AS BIGINT)")
     val bad = df.filter(
       VectorExpressions.md5Prefix60(col("x")) =!= ref).count()
@@ -273,7 +296,7 @@ class VectorExpressionsSpec extends SparkSpec {
       "The quick brown fox jumps over the lazy dog",
       "  padded   with   runs\tof\nwhitespace  ",
       "one", "one two", "a b c a b c a b c",
-      "Ünïcode tökens and CAPS and 123 numbers")
+      "Ünïcode tökens and CAPS and 123 numbers") ++ edges
     val df = texts.toDF("text")
     val hof = transform(TextFunctions.wordShingles(col("text"), 3), s => xxhash64(s))
     val bad = df.select(TextExpressions.wordShingleHashes(col("text"), 3).as("x"), hof.as("y"))
@@ -287,7 +310,7 @@ class VectorExpressionsSpec extends SparkSpec {
       "  padded   with   runs\tof\nwhitespace  ",
       "one", "one two three four five six seven eight nine",
       "a b c a b c a b c",
-      "Ünïcode tökens and CAPS and 123 numbers")
+      "Ünïcode tökens and CAPS and 123 numbers") ++ edges
     val df = texts.toDF("text")
     for (n <- Seq(2, 8)) {
       val bad = df.select(
@@ -298,6 +321,31 @@ class VectorExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("WordShinglePositional and WinnowedPositional grams equal the tokens(text) " +
+      "windows, on the edges and over a multi-row parquet scan") {
+    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = for (n <- Seq(1, 3, 8)) {
+      val toks = TextFunctions.tokens(col("text"))
+      val ref = transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+        i => struct(i.as("pos"), concat_ws(" ", slice(toks, i + 1, lit(n))).as("gram")))
+      val bad = df.select(
+          TextExpressions.wordShinglePositional(col("text"), n).as("x"), ref.as("y"),
+          TextExpressions.winnowedPositional(col("text"), n, 4).as("w"))
+        .filter(col("x") =!= col("y") || exists(col("w"), p =>
+          element_at(col("y"), p.getField("pos") + 1).getField("gram") =!= p.getField("gram")))
+        .count()
+      assert(bad == 0, s"$label, n=$n diverged")
+    }
+    val texts = Seq("The quick brown fox jumps over the lazy dog",
+      "  padded   with   runs\tof\nwhitespace  ", "a b c a b c a b c") ++ edges
+    check(texts.toDF("text"), "literals")
+    // one parquet file of many rows: every output gram must survive the
+    // scan moving on to the next row
+    val dir = java.nio.file.Files.createTempDirectory("graft-positional").resolve("t").toString
+    graft.Tables.load(spark, sfDir, "documents").select(col("text"))
+      .union(texts.toDF("text")).coalesce(1).write.parquet(dir)
+    check(spark.read.parquet(dir), "parquet scan")
+  }
+
   test("LangId expression matches the greatest(struct) formulation") {
     val texts = Seq(
       "the cat is on the mat and it is happy",
@@ -305,7 +353,7 @@ class VectorExpressionsSpec extends SparkSpec {
       "el perro es un animal que no es gato",
       "le chien est dans le jardin pour la nuit",
       "xyzzy plugh qwerty",        // no stopwords at all → tie on 0
-      "the der el le")             // every lang scores once → 4-way tie
+      "the der el le") ++ edges    // every lang scores once → 4-way tie
     val df = texts.toDF("text")
     val hofScored = TextFunctions.stopwords.keys.toSeq.sorted.map(l =>
       struct(TextFunctions.stopwordRatio(col("text"), l).as("score"), lit(l).as("lang")))
@@ -321,7 +369,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (2L, "  Leading  And   MIXED case  "),
       (3L, ""),                       // empty text → the [""] token, tf 1
       (4L, "Ünïcode tökens ünïcode"),
-      (5L, "a b c a b a"))
+      (5L, "a b c a b a")) ++ edges.zipWithIndex.map { case (t, i) => (100L + i, t) }
     val df = texts.toDF("doc_id", "text")
     val hof = df
       .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("token"))
@@ -340,7 +388,7 @@ class VectorExpressionsSpec extends SparkSpec {
       (2L, "one"),                    // < 2 tokens → no bigrams
       (3L, ""),
       (4L, "  A  b   a b A  "),
-      (5L, "x y x y x"))
+      (5L, "x y x y x")) ++ edges.zipWithIndex.map { case (t, i) => (100L + i, t) }
     val df = texts.toDF("doc_id", "text")
     val t = TextFunctions.tokens(col("text"))
     val n = greatest(size(t) - lit(1), lit(0))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the optimization rounds: dump `.explain("formatted")`
   * for a set of SparkEntry queries to files —
   * `Test/runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...|all> [sfDir]`.
@@ -18,15 +16,7 @@ object PlanDump {
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(8)
     names.foreach { name =>
       val res = scala.util.Try {
         val df = graft.SparkEntry.queries(name)(spark, dir)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler for the optimization rounds:
   * `Test/runMain graft.tools.ProfileQuery <query> [sfDir] [cpus]`
@@ -14,16 +13,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = graft.GraftSession.local(cpus)
 
     case class Job(id: Int, desc: String, start: Long,
                    var end: Long = -1L, var taskMs: Long = 0L, var nTasks: Int = 0)
